@@ -22,6 +22,9 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from knime_core_columnar_spark.schema import ROW_KEY
+from knime_core_columnar_spark.session import (
+    ensure_pkg_on_executors as _ensure_pkg_on_executors,
+)
 from knime_core_columnar_spark.table import ColumnarTable, RowIdPolicy
 
 QUERIES: Dict[str, Callable[[SparkSession, str], DataFrame]] = {}
@@ -36,43 +39,6 @@ def query(name: str, oracle: str | None = None):
         return fn
 
     return deco
-
-
-_PKG_SHIPPED: set[int] = set()
-
-
-def _ensure_pkg_on_executors(spark: SparkSession) -> None:
-    """Ship this package to executor python workers via addPyFile.
-
-    Queries that use pandas UDFs / mapInPandas reference module-level
-    kernels; cloudpickle serializes those BY REFERENCE when the module is
-    importable on the driver, so executors must be able to import the
-    package too. When the harness runs from a foreign cwd (driver-style
-    file-path import), workers would otherwise fail with
-    ModuleNotFoundError. A zip of the package added per-SparkContext
-    fixes this everywhere (local and cluster mode alike)."""
-    key = id(spark.sparkContext)
-    if key in _PKG_SHIPPED:
-        return
-    import os
-    import tempfile
-    import zipfile
-
-    # the TOP-LEVEL package dir (this file lives in the catalog/
-    # subpackage since the round-6 split — one more dirname up)
-    pkg_dir = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    zpath = os.path.join(tempfile.gettempdir(), "knime_core_columnar_spark_pkg.zip")
-    tmp = zpath + f".{os.getpid()}.part"
-    with zipfile.ZipFile(tmp, "w") as z:
-        for root, _dirs, files in os.walk(pkg_dir):
-            for f in files:
-                if f.endswith(".py"):
-                    full = os.path.join(root, f)
-                    rel = os.path.relpath(full, os.path.dirname(pkg_dir))
-                    z.write(full, rel)
-    os.replace(tmp, zpath)
-    spark.sparkContext.addPyFile(zpath)
-    _PKG_SHIPPED.add(key)
 
 
 #: (path, mtime) → (row-group count, total byte size); footer metadata

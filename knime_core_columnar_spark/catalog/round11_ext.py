@@ -571,6 +571,30 @@ _WF_DAG_ORACLE = """
 """
 
 
+def _load_authored_workflow(prefix: str, node_files: dict[str, str],
+                            workflow_knime: str):
+    """Author a saved-workflow directory (one ``settings.xml`` per node
+    directory plus ``workflow.knime``), compile it, and remove it. The
+    loader reads every file eagerly, and the program keeps no path into
+    the directory: CSV paths come from the reader settings and point at
+    the published CSV directories."""
+    import os
+    import tempfile
+
+    from knime_core_columnar_spark.plans.workflow import load_workflow_program
+
+    with tempfile.TemporaryDirectory(prefix=prefix) as wf_dir:
+        for d, xml in node_files.items():
+            os.makedirs(os.path.join(wf_dir, d))
+            with open(os.path.join(wf_dir, d, "settings.xml"), "w",
+                      encoding="utf-8") as f:
+                f.write(xml)
+        with open(os.path.join(wf_dir, "workflow.knime"), "w",
+                  encoding="utf-8") as f:
+            f.write(workflow_knime)
+        return load_workflow_program(wf_dir)
+
+
 @query("workflow_dag_execute", _WF_DAG_ORACLE)
 def _r11x_workflow_dag_execute(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A converging saved workflow executed from its on-disk directory:
@@ -590,11 +614,9 @@ def _r11x_workflow_dag_execute(spark: SparkSession, sf_dir: str) -> DataFrame:
         _artifact_tag,
         _publish_dir,
     )
-    from knime_core_columnar_spark.plans.workflow import load_workflow_program
     from knime_core_columnar_spark.sources.io import read_csv
 
     import os
-    import tempfile
 
     cols = ["o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice",
             "o_orderpriority"]
@@ -609,7 +631,6 @@ def _r11x_workflow_dag_execute(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         _publish_dir(f"{csv_dir}.part{os.getpid()}", csv_dir)
 
-    wf_dir = tempfile.mkdtemp(prefix="kccs_wf_dag_")
     node_files = {
         "CSV Reader (#1)": _WF_DAG_CSV_READER_XML.replace(
             "{csv_path}", csv_dir),
@@ -620,16 +641,8 @@ def _r11x_workflow_dag_execute(spark: SparkSession, sf_dir: str) -> DataFrame:
         "Concatenate (#5)": _WF_DAG_CONCATENATE_XML,
         "Column Filter (#6)": _WF_DAG_COLUMN_FILTER_XML,
     }
-    for d, xml in node_files.items():
-        os.makedirs(os.path.join(wf_dir, d), exist_ok=True)
-        with open(os.path.join(wf_dir, d, "settings.xml"), "w",
-                  encoding="utf-8") as f:
-            f.write(xml)
-    with open(os.path.join(wf_dir, "workflow.knime"), "w",
-              encoding="utf-8") as f:
-        f.write(_WF_DAG_WORKFLOW_KNIME)
-
-    prog = load_workflow_program(wf_dir)
+    prog = _load_authored_workflow("kccs_wf_dag_", node_files,
+                                   _WF_DAG_WORKFLOW_KNIME)
     bindings = {}
     for name, spec in prog.csv_specs.items():
         schema = ", ".join(f"{n} {t}" for n, t in spec.columns)
@@ -804,11 +817,9 @@ def _r11x_workflow_join_execute(spark: SparkSession, sf_dir: str) -> DataFrame:
         _artifact_tag,
         _publish_dir,
     )
-    from knime_core_columnar_spark.plans.workflow import load_workflow_program
     from knime_core_columnar_spark.sources.io import read_csv
 
     import os
-    import tempfile
 
     tag = _artifact_tag(sf_dir, "orders")
     orders_csv = f"/tmp/kccs_workflow_dag_csv_{tag}"
@@ -833,7 +844,6 @@ def _r11x_workflow_join_execute(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         _publish_dir(f"{customer_csv}.part{os.getpid()}", customer_csv)
 
-    wf_dir = tempfile.mkdtemp(prefix="kccs_wf_join_")
     node_files = {
         "CSV Reader (#1)": _WF_DAG_CSV_READER_XML.replace(
             "{csv_path}", orders_csv),
@@ -842,16 +852,8 @@ def _r11x_workflow_join_execute(spark: SparkSession, sf_dir: str) -> DataFrame:
             "{csv_path}", customer_csv),
         "Joiner (#4)": _WF_JOIN_JOINER_XML,
     }
-    for d, xml in node_files.items():
-        os.makedirs(os.path.join(wf_dir, d), exist_ok=True)
-        with open(os.path.join(wf_dir, d, "settings.xml"), "w",
-                  encoding="utf-8") as f:
-            f.write(xml)
-    with open(os.path.join(wf_dir, "workflow.knime"), "w",
-              encoding="utf-8") as f:
-        f.write(_WF_JOIN_WORKFLOW_KNIME)
-
-    prog = load_workflow_program(wf_dir)
+    prog = _load_authored_workflow("kccs_wf_join_", node_files,
+                                   _WF_JOIN_WORKFLOW_KNIME)
     keys = {"source": ["o_orderkey"], "source_2": ["c_custkey"]}
     bindings = {}
     for name, spec in prog.csv_specs.items():
@@ -932,11 +934,9 @@ def _r11x_workflow_topk_execute(spark: SparkSession, sf_dir: str) -> DataFrame:
         _artifact_tag,
         _publish_dir,
     )
-    from knime_core_columnar_spark.plans.workflow import load_workflow_program
     from knime_core_columnar_spark.sources.io import read_csv
 
     import os
-    import tempfile
 
     tag = _artifact_tag(sf_dir, "orders")
     orders_csv = f"/tmp/kccs_workflow_dag_csv_{tag}"
@@ -950,22 +950,13 @@ def _r11x_workflow_topk_execute(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         _publish_dir(f"{orders_csv}.part{os.getpid()}", orders_csv)
 
-    wf_dir = tempfile.mkdtemp(prefix="kccs_wf_topk_")
     node_files = {
         "CSV Reader (#1)": _WF_DAG_CSV_READER_XML.replace(
             "{csv_path}", orders_csv),
         "Top k Selector (#2)": _WF_TOPK_XML,
     }
-    for d, xml in node_files.items():
-        os.makedirs(os.path.join(wf_dir, d), exist_ok=True)
-        with open(os.path.join(wf_dir, d, "settings.xml"), "w",
-                  encoding="utf-8") as f:
-            f.write(xml)
-    with open(os.path.join(wf_dir, "workflow.knime"), "w",
-              encoding="utf-8") as f:
-        f.write(_WF_TOPK_WORKFLOW_KNIME)
-
-    prog = load_workflow_program(wf_dir)
+    prog = _load_authored_workflow("kccs_wf_topk_", node_files,
+                                   _WF_TOPK_WORKFLOW_KNIME)
     (name,) = prog.sources
     spec = prog.csv_specs[name]
     schema = ", ".join(f"{n} {t}" for n, t in spec.columns)

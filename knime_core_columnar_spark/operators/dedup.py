@@ -340,14 +340,17 @@ def minhash_lsh_candidates(
     in-bucket self-join → distinct pairs. The only shuffled payload is
     (id, band_key); document text never moves.
 
-    r12: the band table is lazily localCheckpoint-ed before the
+    r12: the band table is localCheckpoint-ed (eager=False) before the
     self-join — the executed plan showed ReusedExchange NEVER fired
     across the join's two sides (0 reuses, 2 parquet scans), so the
     signature pass (shingle explode + num_perm min-hash aggregation,
     the compute-heavy stage of the whole near-dup family) ran TWICE
     per call. The checkpoint materializes the (id, band, key) rows —
     exactly the index incremental_dedup_admit persists — once, and
-    both join sides read it."""
+    both join sides read it. "Lazy" does not defer the signature pass
+    to the caller's action: with AQE on, building the checkpoint runs
+    the plan's shuffle stages as jobs, so constructing this frame
+    already executes the aggregation."""
     banded = minhash_band_table(
         df, id_col, text_col, num_perm, bands, shingle_n
     ).localCheckpoint(eager=False)
@@ -616,6 +619,10 @@ def simhash_near_pairs(
     )
 
 
+#: Driver-tier budget per edge row: two 8-byte ids.
+_CC_EDGE_BYTES = 16
+
+
 def connected_components(
     edges: DataFrame,
     src_col: str = "id_a",
@@ -629,38 +636,66 @@ def connected_components(
     verification (every document keeps min-id as its canonical
     representative).
 
-    Iterative min-label propagation: each round every node takes the min
-    of its own label and its neighbors' labels; a round is one shuffled
-    join + aggregation, and the loop stops when no label changes (or
-    raises at ``max_iter`` — an un-converged run must never silently
-    return partial labels, because downstream keep-min-id dedup would
-    quietly treat one cluster as several). Typical near-dup clusters
-    are a handful of documents, so this is 3-5 rounds in practice, each
-    a bulk-synchronous Spark job (the same schedule GraphX/Pregel CC
-    runs). Plain propagation needs diameter-many rounds, which is the
-    100 TB hazard: chain-shaped duplicate clusters (A~B~C~… template
-    drift) have large diameters. From round ``compress_from`` onward
-    each round therefore also POINTER-DOUBLES (label := min(label,
-    label[label]) — Shiloach-Vishkin path compression, one extra
-    node-sized join per round), which makes convergence logarithmic in
-    the diameter: a 64-chain converges in ~8 rounds instead of 63,
-    and ``max_iter=20`` covers any physically possible diameter.
-    Small-diameter graphs converge before ``compress_from`` and never
-    pay for the extra join. ``localCheckpoint`` truncates the lineage
-    each round so the plan does not grow with the iteration count.
+    Two tiers, selected by edge count. Both start from the same step:
+    the two-column edge list is materialized ONCE and counted in one
+    action. The caller's edge derivation may be an expensive subtree
+    (LSH verify joins, blocked Levenshtein) and is never computed twice.
+
+    - **Driver tier** — when rows × 16 B (two 8-byte ids) fit the
+      session's resolved ``spark.sql.autoBroadcastJoinThreshold``, the
+      size up to which Spark itself collects a join side to the driver.
+      The edges are collected through Arrow and labelled with numpy
+      (``_min_label_roots``), and a local DataFrame is returned. A BSP
+      superstep costs a fixed ~0.1 s per SQL execution however small
+      the graph (4-core x86-64 VM, ``local[4]``): entity_resolution's
+      ≤64-node graph took 3 supersteps and 25 jobs, where this tier
+      adds the count and one collect to the edge derivation's own jobs. The reference makes the same call
+      for data that fits one ~64 MiB batch (``HeapBadger.java:94-97``).
+    - **BSP tier** — larger graphs, or broadcasts disabled (threshold
+      ≤ 0). Iterative min-label propagation: each round every node
+      takes the min of its own label and its neighbors' labels; a round
+      is one shuffled join + aggregation, and the loop stops when no
+      label changes (or raises at ``max_iter`` — an un-converged run
+      must never silently return partial labels, because downstream
+      keep-min-id dedup would quietly treat one cluster as several).
+      Typical near-dup clusters are a handful of documents, so this is
+      3-5 rounds in practice, each a bulk-synchronous Spark job (the
+      same schedule GraphX/Pregel CC runs). Plain propagation needs
+      diameter-many rounds, which is the 100 TB hazard: chain-shaped
+      duplicate clusters (A~B~C~… template drift) have large diameters.
+      From round ``compress_from`` onward each round therefore also
+      POINTER-DOUBLES (label := min(label, label[label]) —
+      Shiloach-Vishkin path compression, one extra node-sized join per
+      round), which shortens convergence on chains: a 64-chain
+      converges in ~8 rounds instead of 63. It is not a worst-case
+      bound — a 4M-edge random graph with a giant component ran past
+      ``max_iter=20`` on this tier. Small-diameter graphs converge
+      before ``compress_from`` and never pay for the extra join.
+      ``localCheckpoint`` truncates the lineage each round so the plan
+      does not grow with the iteration count. ``max_iter`` bounds these
+      rounds only; the driver tier always runs to its fixpoint.
+
+    Null endpoints: SQL equality never matches null, so a null id is
+    not a node and an edge with a null endpoint connects nothing; its
+    non-null endpoint is still a node. Both tiers return the same rows
+    and schema: ``node`` and ``label`` take the edge columns' common
+    type.
     """
-    # materialize the symmetric edge list ONCE — the caller's edge
-    # derivation may be an expensive subtree (LSH verify joins, blocked
-    # Levenshtein), and every BSP round below joins against it plus
-    # runs a convergence count: without this, each of the ~2·rounds
-    # actions recomputes the whole derivation (measured 122 s → 40 s
-    # for entity_resolution at sf0.1). Same discipline as
-    # graph.pagerank_scaled's adj materialization.
-    sym = edges.select(
+    # A lazy localCheckpoint is not free to build: with AQE on, building
+    # it executes the plan's shuffle stages to produce the checkpoint
+    # RDD (one job per shuffle stage of the edge derivation). The count
+    # is the one action that persists it.
+    e = edges.select(
         F.col(src_col).alias("src"), F.col(dst_col).alias("dst")
-    ).unionByName(
-        edges.select(F.col(dst_col).alias("src"), F.col(src_col).alias("dst"))
     ).localCheckpoint(eager=False)
+    n_edges = e.count()
+    sym = e.unionByName(
+        e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+    ).filter(F.col("src").isNotNull())
+    spark = edges.sparkSession
+    threshold = spark._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()
+    if threshold > 0 and n_edges * _CC_EDGE_BYTES <= threshold:
+        return _cc_on_driver(e, sym.schema["src"])
     # r11: seed labels at min(node, min neighbor) — the node-distinct
     # pass was a groupBy on the same (src) shuffle anyway, so folding
     # min(dst) into it runs propagation round 1 for free: one fewer
@@ -683,14 +718,13 @@ def connected_components(
             .groupBy("src")
             .agg(F.min("label").alias("nbr_label"))
         )
-        # r12: every checkpoint in the loop is LAZY and the convergence
-        # count is the action that materializes it — ONE driver action
-        # per superstep (the eager checkpoint + separate probe count
-        # was 2, plus a third for the pointer-doubling hop). The lazy
-        # checkpoint still truncates the logical plan at build time
-        # (the returned frame wraps a LogicalRDD), and the count's
-        # filter cannot prune columns through that RDD boundary, so the
-        # full label frame is persisted by the same job that probes it.
+        # The convergence count is the only action per superstep, and
+        # it is what persists the round's lazy checkpoint; the count's
+        # filter cannot prune columns through the checkpoint's RDD
+        # boundary, so the full label frame is persisted by the same
+        # job that probes it. Building each lazy checkpoint still runs
+        # the jobs of its plan's shuffle stages (AQE), so a superstep
+        # is several jobs, not one.
         upd = F.least(
             F.col("label"), F.coalesce(F.col("nbr_label"), F.col("label"))
         )
@@ -732,7 +766,7 @@ def connected_components(
                 )
                 # lazy: the NEXT round's convergence count (or the
                 # caller's action, if this was the last round)
-                # materializes the hop — no dedicated job for it
+                # persists the hop — no dedicated count for it
                 .localCheckpoint(eager=False)
             )
     if changed > 0:
@@ -744,6 +778,72 @@ def connected_components(
             "list for corruption, or raise max_iter."
         )
     return labels.select("node", "label")
+
+
+def _cc_on_driver(e: DataFrame, id_field) -> DataFrame:
+    """Driver tier of ``connected_components``: collect the (src, dst)
+    edge list through Arrow, rank the distinct non-null ids in sort
+    order (``np.unique``: numeric order, and code-point order for
+    strings, which is Spark's binary UTF-8 order), so the smallest rank
+    is the smallest id; label the ranks with ``_min_label_roots`` and
+    return (node, label) as a local DataFrame, both columns typed like
+    ``id_field`` (the BSP tier's ``node`` column)."""
+    import numpy as np
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_type
+    from pyspark.sql.types import StructField, StructType
+
+    arrow_type = to_arrow_type(id_field.dataType)
+    tbl = e.toArrow()
+    ids = pa.concat_arrays(
+        [tbl.column(c).combine_chunks().cast(arrow_type) for c in ("src", "dst")]
+    )
+    valid = ids.is_valid().to_numpy(zero_copy_only=False)
+    nodes, ranks = np.unique(
+        ids.drop_null().to_numpy(zero_copy_only=False), return_inverse=True
+    )
+    rank = np.full(len(ids), -1)
+    rank[valid] = ranks
+    src, dst = rank[: tbl.num_rows], rank[tbl.num_rows :]
+    linked = (src >= 0) & (dst >= 0)
+    roots = _min_label_roots(len(nodes), src[linked], dst[linked])
+    schema = StructType(
+        [StructField(c, id_field.dataType, id_field.nullable) for c in ("node", "label")]
+    )
+    out = pa.table({
+        "node": pa.array(nodes, type=arrow_type),
+        "label": pa.array(nodes[roots], type=arrow_type),
+    })
+    return e.sparkSession.createDataFrame(out, schema=schema)
+
+
+def _min_label_roots(n: int, src, dst):
+    """Smallest member of each node's component, for nodes ``0..n-1``
+    joined by the edges ``src[i]``–``dst[i]``: vectorized min-label
+    propagation with pointer jumping, no per-edge Python loop.
+
+    ``parent`` starts as the identity, and ``parent[v] <= v`` always
+    holds, so parents never form a cycle and the smallest member of a
+    component is always a root. Each round first compresses every path
+    to its root (pointer jumping), so both endpoints of an edge read
+    their roots; the round ends when every edge joins one root, which
+    is then the component minimum. Otherwise every root takes the
+    smallest root across its edges, which removes at least one root
+    per round."""
+    import numpy as np
+
+    parent = np.arange(n)
+    while True:
+        while True:
+            grand = parent[parent]
+            if np.array_equal(grand, parent):
+                break
+            parent = grand
+        ps, pd_ = parent[src], parent[dst]
+        if np.array_equal(ps, pd_):
+            return parent
+        np.minimum.at(parent, ps, pd_)
+        np.minimum.at(parent, pd_, ps)
 
 
 def ngram_contamination(

@@ -44,6 +44,41 @@ _DEFAULTS: dict[str, str] = {
 }
 
 
+_PKG_SHIPPED: set[int] = set()
+
+
+def ensure_pkg_on_executors(spark: SparkSession) -> None:
+    """Ship this package to executor python workers via addPyFile.
+
+    Pandas UDFs / mapInPandas kernels that reference this package's
+    module-level functions (or import it inside the closure) need the
+    package importable on the executors: cloudpickle serializes those
+    functions BY REFERENCE when the module is importable on the driver.
+    When the driver runs from a foreign cwd (file-path import, as the
+    driver contract does), workers would otherwise fail with
+    ModuleNotFoundError. A zip of the package added once per
+    SparkContext fixes this everywhere (local and cluster mode alike)."""
+    key = id(spark.sparkContext)
+    if key in _PKG_SHIPPED:
+        return
+    import tempfile
+    import zipfile
+
+    pkg_dir = os.path.dirname(os.path.abspath(__file__))
+    zpath = os.path.join(tempfile.gettempdir(), "knime_core_columnar_spark_pkg.zip")
+    tmp = zpath + f".{os.getpid()}.part"
+    with zipfile.ZipFile(tmp, "w") as z:
+        for root, _dirs, files in os.walk(pkg_dir):
+            for f in files:
+                if f.endswith(".py"):
+                    full = os.path.join(root, f)
+                    rel = os.path.relpath(full, os.path.dirname(pkg_dir))
+                    z.write(full, rel)
+    os.replace(tmp, zpath)
+    spark.sparkContext.addPyFile(zpath)
+    _PKG_SHIPPED.add(key)
+
+
 def get_spark(
     app_name: str = "knime-core-columnar-spark",
     master: str | None = None,

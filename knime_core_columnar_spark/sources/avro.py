@@ -44,6 +44,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F  # noqa: F401  (parity with sibling modules)
 from pyspark.sql import types as T
 
+from knime_core_columnar_spark.session import ensure_pkg_on_executors
+
 MAGIC = b"Obj\x01"
 SYNC_SIZE = 16
 
@@ -473,6 +475,7 @@ def read_avro_py(
         head = fh.read(1 << 20)  # header fits well within 1 MiB
     schema, _codec, _sync = _read_header(_Cursor(head))
     st = avro_spark_schema(schema)
+    ensure_pkg_on_executors(spark)
 
     def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf_in in batches:
@@ -747,6 +750,7 @@ def write_avro(
     from . import fsio
 
     fsio.make_out_dir(directory)
+    ensure_pkg_on_executors(df.sparkSession)
     schema_json = df.schema.json()
 
     def write_partition(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:

@@ -26,6 +26,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from knime_core_columnar_spark.operators.domain import attach_domains, compute_domains
+from knime_core_columnar_spark.session import ensure_pkg_on_executors
 from knime_core_columnar_spark.table import ColumnarTable
 
 
@@ -201,6 +202,7 @@ def write_arrow_ipc(
     from . import fsio
 
     fsio.make_out_dir(directory)
+    ensure_pkg_on_executors(table.df.sparkSession)
     schema_json = table.df.schema.json()
 
     def write_partition(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:

@@ -52,6 +52,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from knime_core_columnar_spark.session import ensure_pkg_on_executors
+
 __all__ = ["write_warc", "read_warc", "warc_file_of"]
 
 _WARC_DATE = "2024-01-01T00:00:00Z"
@@ -126,6 +128,7 @@ def write_warc(
     from . import fsio
 
     fsio.make_out_dir(out_dir)
+    ensure_pkg_on_executors(df.sparkSession)
 
     def _write_file(pdf: pd.DataFrame) -> pd.DataFrame:
         fid = int(pdf["__file"].iloc[0])
@@ -257,6 +260,7 @@ def read_warc(spark: SparkSession, path: str) -> DataFrame:
     ``payload`` is the usable document bytes and ``http_status`` /
     ``http_content_type`` come from the HTTP header block; otherwise
     ``payload`` == ``content`` and the HTTP fields are null."""
+    ensure_pkg_on_executors(spark)
     files = spark.read.format("binaryFile").load(path).select(
         "path", "content"
     )

@@ -47,6 +47,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from knime_core_columnar_spark.session import ensure_pkg_on_executors
+
 __all__ = ["shard_of", "write_webdataset", "read_webdataset"]
 
 
@@ -91,6 +93,7 @@ def write_webdataset(
     from . import fsio
 
     fsio.make_out_dir(out_dir)
+    ensure_pkg_on_executors(df.sparkSession)
     cols = [key_col, *text_cols, *binary_cols]
 
     def _write_shard(pdf: pd.DataFrame) -> pd.DataFrame:

@@ -1139,3 +1139,25 @@ def test_topk_save_refusal_and_json_roundtrip(spark):
     assert rt.steps[-1].args == plan.steps[-1].args
     with pytest.raises(ValueError, match="persisted IR catalog"):
         save_knime_settings(plan)
+
+
+@pytest.mark.parametrize(
+    "name", ["workflow_dag_execute", "workflow_join_execute",
+             "workflow_topk_execute"],
+)
+def test_authored_workflow_dir_is_removed(spark, sf_dir, name):
+    """The catalog's on-disk workflow queries author their workflow
+    directory per call; it must be gone once the program is loaded, and
+    the program must still execute without it."""
+    import tempfile
+
+    from knime_core_columnar_spark import catalog
+
+    def wf_dirs():
+        return {e for e in os.listdir(tempfile.gettempdir())
+                if e.startswith("kccs_wf_")}
+
+    before = wf_dirs()
+    df = catalog.QUERIES[name](spark, sf_dir)
+    assert wf_dirs() - before == set()
+    assert df.count() > 0

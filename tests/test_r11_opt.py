@@ -128,12 +128,14 @@ def test_connected_components_seeded_init_fixpoint(spark):
     from knime_core_columnar_spark.operators.dedup import (
         connected_components,
     )
+    from tests.test_cc_tiers import bsp_tier
 
     chain = [(i, i + 1) for i in range(10, 30)]          # diameter 20
     extra = [(3, 1), (1, 2), (50, 50), (40, 41), (41, 42)]
     edges = spark.createDataFrame(chain + extra, "id_a long, id_b long")
-    got = {r["node"]: r["label"]
-           for r in connected_components(edges, "id_a", "id_b").collect()}
+    with bsp_tier(spark):
+        got = {r["node"]: r["label"]
+               for r in connected_components(edges, "id_a", "id_b").collect()}
     for n in range(10, 31):
         assert got[n] == 10
     assert got[1] == got[2] == got[3] == 1

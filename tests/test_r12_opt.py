@@ -1,12 +1,19 @@
-"""Round-12 optimization pins: the BSP loops run ONE driver action per
-superstep (lazy localCheckpoint materialized by the convergence probe /
-the consumer's action) instead of dedicated eager-checkpoint jobs.
+"""Round-12 optimization pins: the BSP loops issue ONE driver action
+per superstep (the convergence count, which persists the round's lazy
+localCheckpoint; the consumer's action persists the last one) instead
+of a dedicated eager-checkpoint job plus a probe.
 
-The job-count bounds below sit between the measured totals of the old
-(eager) and new (lazy) implementations on fixed toy graphs with this
-repo's pinned Spark version and session config, so a regression back to
-eager checkpointing — or any new per-round driver action — trips them
-while AQE's normal stage-job accounting does not.
+A lazy checkpoint is not free to build: with AQE on, building a
+``localCheckpoint(eager=False)`` executes its plan's shuffle stages to
+produce the checkpoint RDD, so every superstep still runs several jobs
+(a 16-edge chain schedules 33-48 jobs in all, fewer once warm). The job-count bounds below
+sit between the measured totals of the old (eager) and new (lazy)
+implementations on fixed toy graphs with this repo's pinned Spark
+version and session config, so a regression back to eager
+checkpointing — or any new per-round driver action — trips them while
+AQE's normal stage-job accounting does not. connected_components is
+pinned on its BSP tier (broadcasts disabled): a graph this small is
+otherwise labelled on the driver.
 """
 
 from __future__ import annotations
@@ -38,6 +45,7 @@ def test_connected_components_one_action_per_superstep(spark):
     from knime_core_columnar_spark.operators.dedup import (
         connected_components,
     )
+    from tests.test_cc_tiers import bsp_tier
 
     edges = spark.createDataFrame(
         [(i, i + 1) for i in range(16)], "id_a long, id_b long"
@@ -47,7 +55,8 @@ def test_connected_components_one_action_per_superstep(spark):
         out = connected_components(edges, "id_a", "id_b")
         return out.collect()
 
-    rows, jobs = _run_in_group(spark, go)
+    with bsp_tier(spark):
+        rows, jobs = _run_in_group(spark, go)
     assert {r["node"] for r in rows} == set(range(17))
     assert all(r["label"] == 0 for r in rows)
     assert jobs <= 52, f"CC scheduled {jobs} jobs (eager regression?)"

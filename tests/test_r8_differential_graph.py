@@ -12,6 +12,7 @@ from itertools import combinations
 from hypothesis import given
 from hypothesis import strategies as st
 
+from tests.test_cc_tiers import bsp_tier
 from tests.test_r8_differential import _SETTINGS
 
 _NODE = st.integers(0, 14)
@@ -43,8 +44,9 @@ def test_connected_components_match_union_find(spark_session, edges):
     )
 
     df = spark_session.createDataFrame(edges, "id_a long, id_b long")
-    got = {r["node"]: r["label"]
-           for r in connected_components(df).collect()}
+    with bsp_tier(spark_session):
+        got = {r["node"]: r["label"]
+               for r in connected_components(df).collect()}
     assert got == _uf_labels(edges), edges
 
 

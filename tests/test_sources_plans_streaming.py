@@ -56,6 +56,39 @@ def test_arrow_ipc_roundtrip(spark, tmp_path):
     assert got == orig
 
 
+def test_write_arrow_ipc_from_foreign_cwd(tmp_path):
+    """A driver that imports the package by path from another working
+    directory (as the driver contract does) must still write Arrow IPC:
+    the executor closure imports the package, so write_arrow_ipc ships
+    it to the workers. Runs in a fresh process: the test session's
+    workers already see the package from the repo-root cwd."""
+    import subprocess
+    import sys
+    import textwrap
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    out = str(tmp_path / "arrow_out")
+    script = textwrap.dedent(f"""
+        import sys
+        sys.path.insert(0, {repo!r})
+        from knime_core_columnar_spark.session import get_spark
+        from knime_core_columnar_spark.sources import read_arrow_ipc, write_arrow_ipc
+        from knime_core_columnar_spark.table import ColumnarTable
+
+        spark = get_spark(master="local[1]", shuffle_partitions=1,
+                          extra_conf={{"spark.driver.memory": "1g"}})
+        t = ColumnarTable.from_dataframe(spark.range(100).toDF("n"), key_columns=["n"])
+        write_arrow_ipc(t, {out!r})
+        print("rows", read_arrow_ipc(spark, {out!r}).count())
+        spark.stop()
+    """)
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    r = subprocess.run([sys.executable, "-c", script], cwd=tmp_path, env=env,
+                       capture_output=True, text=True, timeout=600)
+    assert r.returncode == 0, r.stderr[-3000:]
+    assert "rows 100" in r.stdout
+
+
 def test_arrow_ipc_single_file(spark, tmp_path):
     import pyarrow as pa
     import pyarrow.ipc

@@ -138,12 +138,14 @@ def test_connected_components_long_chain_pointer_doubling(spark):
     Pointer doubling (compress_from=3) must converge it well inside the
     default budget — this pins the silent-partial-labels hazard closed."""
     from knime_core_columnar_spark.operators.dedup import connected_components
+    from tests.test_cc_tiers import bsp_tier
 
     n = 64
     edges = spark.createDataFrame(
         [(i, i + 1) for i in range(n - 1)], "id_a long, id_b long"
     )
-    got = {r["node"]: r["label"] for r in connected_components(edges).collect()}
+    with bsp_tier(spark):
+        got = {r["node"]: r["label"] for r in connected_components(edges).collect()}
     assert got == {i: 0 for i in range(n)}
 
 
@@ -152,13 +154,14 @@ def test_connected_components_raises_on_non_convergence(spark):
     import pytest
 
     from knime_core_columnar_spark.operators.dedup import connected_components
+    from tests.test_cc_tiers import bsp_tier
 
     edges = spark.createDataFrame(
         [(i, i + 1) for i in range(31)], "id_a long, id_b long"
     )
     # compression disabled (compress_from past max_iter): 5 rounds
     # cannot close a 31-diameter chain, and that must be an ERROR
-    with pytest.raises(RuntimeError, match="did not converge"):
+    with bsp_tier(spark), pytest.raises(RuntimeError, match="did not converge"):
         connected_components(edges, max_iter=5, compress_from=99)
 
 
